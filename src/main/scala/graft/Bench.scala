@@ -2,54 +2,6 @@ package graft
 import org.apache.spark.sql.SparkSession
 object Bench {
 
-  /** Where watchdog thread dumps are persisted. stderr alone proved
-    * useless post-hoc: the driver records only a tail of stdout, so the
-    * r5 q102 spike (47 s driver-side vs ~6 s in reruns) left no stack
-    * evidence. A file next to the bench output survives the run.
-    */
-  private val dumpPath =
-    sys.env.getOrElse("SPARK_GRAFT_DUMP_FILE", "bench_dumps.txt")
-
-  /** The watchdog was built to attribute the r2–r6 bench bimodality
-    * (uniform ~2× runs with clean per-query CPU). Two consecutive
-    * clean driver runs (r7 steal 2.3 s, r8 steal 0.6 s, both
-    * `dumped: []`) closed that investigation, and per-stage
-    * attribution lives in RoundStats now — so the dump machinery is
-    * OFF unless explicitly re-armed (SPARK_GRAFT_WATCHDOG=1). The
-    * `dumped` field stays in the JSON (empty when off) so the
-    * artifact shape is unchanged.
-    */
-  private val watchdogEnabled =
-    sys.env.get("SPARK_GRAFT_WATCHDOG").exists(v =>
-      v == "1" || v.equalsIgnoreCase("true"))
-
-  /** Queries that tripped the watchdog this run (reported in the JSON
-    * so a slow total is attributable without even opening the dump
-    * file).
-    */
-  private val dumped =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  /** Dump all JVM thread stacks — fired by the watchdog when a query
-    * exceeds the soft deadline, to diagnose where a slow run actually
-    * spends its time (the r1/r2 bench bimodality was only attributable
-    * after the fact; this makes the next spike self-describing).
-    * Written to [[dumpPath]] (appended, timestamped) and summarized on
-    * stderr.
-    */
-  private def dumpStacks(tag: String): Unit = synchronized {
-    System.err.println(s"[bench-watchdog] $tag exceeded soft deadline; dump -> $dumpPath")
-    import scala.jdk.CollectionConverters._
-    val sb = new StringBuilder
-    sb ++= s"==== [bench-watchdog] $tag at ${java.time.Instant.now()} ====\n"
-    Thread.getAllStackTraces.asScala.foreach { case (t, frames) =>
-      sb ++= s"  --- ${t.getName} (${t.getState})\n"
-      frames.take(24).foreach(f => sb ++= s"      at $f\n")
-    }
-    val w = new java.io.FileWriter(dumpPath, true)
-    try w.write(sb.result()) finally w.close()
-  }
-
   /** Host CPU accounting from /proc/stat (jiffies, summed over all
     * CPUs): (busy = user+nice+system+irq+softirq, idle, iowait,
     * steal). STEAL is the smoking gun for the r2–r6 driver-bench
@@ -220,7 +172,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    new java.io.File(dumpPath).delete() // fresh dump file per run
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -239,14 +190,8 @@ object Bench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Bisect hook (r14): inject session confs for A/B bench runs,
-    // e.g. SPARK_GRAFT_CONF="spark.graft.dedup.releaseBuckets=false"
-    // (';'-separated pairs). The dedup child sessions propagate the
-    // spark.graft.* keys, so this reaches the production pipelines.
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";")
-      .map(_.trim).filter(_.contains("=")).foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        spark.conf.set(k, v)
-      })
+    // e.g. SPARK_GRAFT_CONF="spark.graft.dedup.pairStorageLevel=DISK_ONLY"
+    ScopedConf.applyEnvConf(spark)
     val sched = new SchedCounters
     spark.sparkContext.addSparkListener(sched)
     // optional local-iteration subset (driver runs the full set)
@@ -382,28 +327,6 @@ object Bench {
       sched.resetWindowFailure()
       val th0 = threadCpuByClass()
       val t0 = System.nanoTime()
-      val done = new java.util.concurrent.atomic.AtomicBoolean(false)
-      val watchdog = if (!watchdogEnabled) None else Some {
-        val t = new Thread(() => {
-          try {
-            // repeat dumps while the query is stuck: successive stacks
-            // distinguish a livelock (same frames each time) from slow
-            // progress (frames advance), which one snapshot can't
-            var k = 0
-            while (k < 4) {
-              Thread.sleep(30000)
-              if (!done.get()) {
-                dumped.add(name)
-                dumpStacks(s"$name +${30 * (k + 1)}s")
-              }
-              k += 1
-            }
-          } catch { case _: InterruptedException => () }
-        }, s"bench-watchdog-$name")
-        t.setDaemon(true)
-        t.start()
-        t
-      }
       try fn(spark, sfDir).count()
       catch {
         // A crashed query must be visible as a crash, not a timing:
@@ -412,9 +335,6 @@ object Bench {
           errors(name) = s"${e.getClass.getSimpleName}: " +
             Option(e.getMessage).getOrElse("").linesIterator.take(1)
               .mkString.take(160)
-      } finally {
-        done.set(true)
-        watchdog.foreach(_.interrupt())
       }
       val dt = (System.nanoTime() - t0) / 1e9
       val c1 = jvmStat()._1
@@ -453,12 +373,10 @@ object Bench {
         case c => c.toString
       } + "\""
     val qs = results.toSeq.sortBy(_._1)
-      .map { case (k, v) => jstr(k) + ":" + v }.mkString("{", ",", "}")
+      .map { case (k, v) => jstr(k) + ":" + f"$v%.3f" }.mkString("{", ",", "}")
     val errs = errors.toSeq.sortBy(_._1)
       .map { case (k, v) => jstr(k) + ":" + jstr(v) }.mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.values.sum else 0.0
-    val dmp = dumped.toArray.map(d => jstr(d.toString)).sorted
-      .mkString("[", ",", "]")
     // Environment evidence for the suite: host steal/iowait (all-CPU
     // jiffies → seconds at HZ=100), JVM process CPU, GC and JIT time.
     // Reading: wall total ≫ proc_cpu-justified with steal_s high ⇒
@@ -505,8 +423,10 @@ object Bench {
           .map { case (k, v) => jstr(k) + ":" + f"$v%.2f" }
           .mkString("{", ",", "}")
       }.mkString("{", ",", "}")
+    // "dumped" (always empty) stays in both lines: artifact readers
+    // parse it
     val full =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"cpu_sec":$cpuQs,"stages":$stageQs,"sched":$schedJs,"threads":$threadJs,"env":$env,"errors":$errs,"dumped":$dmp,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"cpu_sec":$cpuQs,"stages":$stageQs,"sched":$schedJs,"threads":$threadJs,"env":$env,"errors":$errs,"dumped":[],"sf":"$sfDir"}"""
     // Parse-proof shutdown (BENCH_r07 was `parsed: null`: a StateStore
     // maintenance WARN printed AFTER the summary line, so the driver
     // could not parse its tail). Order matters: silence log4j, stop
@@ -536,7 +456,7 @@ object Bench {
     // every pre-existing field is unchanged.
     val slow = results.toSeq.sortBy(-_._2).take(8)
       .map { case (k, v) => jstr(k) + ":" + f"$v%.2f" }.mkString("{", ",", "}")
-    println(s"""{"metric":"total_compact","value":$total,"unit":"sec","n_queries":${results.size},"n_errors":${errors.size},"queries":$qs,"errors":$errs,"dumped":$dmp,"slowest":$slow,"env":$env,"sf":"$sfDir"}""")
+    println(s"""{"metric":"total_compact","value":$total,"unit":"sec","n_queries":${results.size},"n_errors":${errors.size},"queries":$qs,"errors":$errs,"dumped":[],"slowest":$slow,"env":$env,"sf":"$sfDir"}""")
     System.out.flush()
   }
 }

@@ -334,7 +334,7 @@ object ScaleStress {
     * r13 #4): docs-only distinct dir + the q37 invariance leg ALONE,
     * so the sliced-verify envelope can be measured without paying the
     * full family's multi-hour wall. Slice count comes from
-    * SPARK_GRAFT_VERIFY_SLICES (set on the session in main).
+    * `spark.graft.dedup.verifySlices` (set through SPARK_GRAFT_CONF).
     */
   private def runDistinct37(spark: SparkSession, srcDir: String,
       rep: Int): Unit = {
@@ -371,9 +371,7 @@ object ScaleStress {
       sampling = false
       println(f"[stress] q37 ×$rep peak disk delta ${
         (free0 - minFree.get) / 1e9}%.2f GB (start free ${free0 / 1e9}%.2f " +
-        f"GB, min free ${minFree.get / 1e9}%.2f GB, releasePairs=${
-          spark.conf.getOption(
-            graft.queries.DedupQueries.ReleasePairsKey).getOrElse("default")})")
+        f"GB, min free ${minFree.get / 1e9}%.2f GB)")
     }
   }
 
@@ -671,40 +669,11 @@ object ScaleStress {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
-    // Verify-slice knob for the ×4096 q37 probe (propagates into the
-    // dedup child sessions like the other spark.graft.dedup.* keys)
-    sys.env.get("SPARK_GRAFT_VERIFY_SLICES").foreach(v =>
-      spark.conf.set(graft.queries.DedupQueries.VerifySlicesKey, v))
-    // A/B lever for the release-as-you-go peak-disk measurement
-    // (r16; default on — see DedupQueries.ReleasePairsKey)
-    sys.env.get("SPARK_GRAFT_RELEASE_PAIRS").foreach(v =>
-      spark.conf.set(graft.queries.DedupQueries.ReleasePairsKey, v))
-    // Lean checkpoint retention for multi-batch disk-envelope probes
-    // (r16): the ×2048 mb16 legs measured the checkpoint dir as
-    // strictly append-only inside a short run — default
-    // minBatchesToRetain=100 means maintenance never deletes a
-    // version in a ≤9-batch probe, so tens of GB of stale snapshots
-    // co-reside with the live SSTs until ENOSPC. Retaining 2 versions
-    // with a 15 s maintenance tick frees stale versions DURING the
-    // run. This is deployment policy (it shortens the recovery
-    // window), so it is a probe lever, not an engine default — unlike
-    // changelog checkpointing, which StreamingQueries now pins
-    // alongside RocksDB unconditionally (semantics unchanged there).
-    if (sys.env.get("SPARK_GRAFT_LEAN_CKPT").contains("true")) {
-      spark.conf.set("spark.sql.streaming.minBatchesToRetain", "2")
-      spark.conf.set(
-        "spark.sql.streaming.stateStore.maintenanceInterval", "15s")
-      spark.conf.set(
-        "spark.sql.streaming.ratioExtraSpaceAllowedInCheckpoint", "0.0")
-    }
-    // Generic conf pass-through (same contract as Bench's), e.g.
-    // SPARK_GRAFT_CONF="spark.graft.stream.maxFilesPerTrigger=2" for
+    // Session overrides for probes (same parser as Bench's), e.g.
+    // SPARK_GRAFT_CONF="spark.graft.dedup.verifySlices=8" for the
+    // ×4096 q37 probe or "spark.graft.stream.maxFilesPerTrigger=2" for
     // the multi-micro-batch Kafka-regime probe (VERDICT r15 #5)
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";")
-      .filter(_.nonEmpty).foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        spark.conf.set(k, v)
-      })
+    ScopedConf.applyEnvConf(spark)
 
     if (mode == "distinct") {
       runDistinct(spark, srcDir, rep)
@@ -786,9 +755,8 @@ object ScaleStress {
       //    run (the ×1024 probe log recorded no per-run steal — the
       //    gap the verdict named).
       // The dir is REUSED if complete (the ×1024 build is 15 GB /
-      // ~9 min); SPARK_GRAFT_STREAM_PARTITIONS / heapIngestMaxRows /
-      // maxFilesPerTrigger reach the query through their existing
-      // knobs for A/B runs.
+      // ~9 min); heapIngestMaxRows / maxFilesPerTrigger reach the
+      // query through SPARK_GRAFT_CONF for A/B runs.
       val qname = if (args.length > 3) args(3) else "q138_stream_dedup_near"
       val fn = graft.streaming.StreamingQueries.queries.getOrElse(qname,
         sys.error(s"unknown stream query $qname"))

@@ -101,13 +101,57 @@ object ScopedConf {
     */
   def forLoopOf[T](s: SparkSession, rowsPerRound: Long)(body: => T): T =
     if (rowsPerRound <= TinyLoopRows) {
-      val per = s.conf.getOption(LoopRowsPerPartitionKey)
-        .flatMap(_.trim.toLongOption).filter(_ > 0)
-        .getOrElse(LoopRowsPerPartitionDefault)
+      val per = positive(s, LoopRowsPerPartitionKey, LoopRowsPerPartitionDefault)
       val w = math.max(1L, math.min(rowsPerRound / per + 1, 4096L))
       withConf(s,
         "spark.sql.codegen.wholeStage" -> "false",
         "spark.sql.adaptive.enabled" -> "false",
         "spark.sql.shuffle.partitions" -> w.toString)(body)
     } else body
+
+  /** A positive integer `spark.graft.*` knob off session `s`, or
+    * `default` when unset. Every graft knob is read through here: a
+    * value that is not a positive integer throws, naming the key and
+    * the value, instead of silently running the default.
+    */
+  def positive(s: SparkSession, key: String, default: Long): Long =
+    positiveOption(s, key).getOrElse(default)
+
+  /** [[positive]] for a knob whose consumer takes an Int. */
+  def positiveInt(s: SparkSession, key: String, default: Int): Int = {
+    val v = positive(s, key, default)
+    if (v > Int.MaxValue) throw new IllegalArgumentException(
+      s"$key='$v' exceeds ${Int.MaxValue}")
+    v.toInt
+  }
+
+  /** [[positive]] for a knob with no default (None when unset). */
+  def positiveOption(s: SparkSession, key: String): Option[Long] =
+    s.conf.getOption(key).map { v =>
+      v.trim.toLongOption.filter(_ > 0).getOrElse(
+        throw new IllegalArgumentException(
+          s"$key='$v' is not a positive integer"))
+    }
+
+  /** The `SPARK_GRAFT_CONF` entry points' session overrides:
+    * ';'-separated `key=value` pairs (blank entries ignored). An entry
+    * without '=' or with an empty key throws, naming the entry.
+    */
+  def parseConfPairs(spec: String): Seq[(String, String)] =
+    spec.split(";").toSeq.map(_.trim).filter(_.nonEmpty).map { kv =>
+      kv.split("=", 2) match {
+        case Array(k, v) if k.trim.nonEmpty => k.trim -> v
+        case _ => throw new IllegalArgumentException(
+          s"SPARK_GRAFT_CONF entry '$kv' is not key=value")
+      }
+    }
+
+  /** Set every `SPARK_GRAFT_CONF` pair on `s` (see [[parseConfPairs]]).
+    * Dedup child sessions copy the parent's `spark.graft.*` keys, so
+    * these reach the production pipelines.
+    */
+  def applyEnvConf(s: SparkSession): Unit =
+    sys.env.get("SPARK_GRAFT_CONF").foreach(parseConfPairs(_).foreach {
+      case (k, v) => s.conf.set(k, v)
+    })
 }

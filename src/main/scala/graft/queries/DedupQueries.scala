@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.Tables
+import graft.{ScopedConf, Tables}
 import graft.functions.{CosineSim, Hashing, TextFunctions => T}
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
@@ -69,12 +69,7 @@ object DedupQueries {
   private[graft] val FetchIdsPerPartitionDefault: Long = 4096L
 
   private def fetchIdsPerPartition(s: SparkSession): Long =
-    s.conf.get(FetchIdsPerPartitionKey, FetchIdsPerPartitionDefault.toString)
-      .trim.toLongOption.filter(_ > 0).getOrElse {
-        System.err.println(s"[graft] $FetchIdsPerPartitionKey is not a " +
-          s"positive long; using $FetchIdsPerPartitionDefault")
-        FetchIdsPerPartitionDefault
-      }
+    ScopedConf.positive(s, FetchIdsPerPartitionKey, FetchIdsPerPartitionDefault)
 
   /** Scan bytes per partition for the BUCKET-AGGREGATION exchanges —
     * the blocking groupBys that collect (band/chunk/key → member
@@ -109,12 +104,7 @@ object DedupQueries {
   private[graft] def bucketAggParts(scan: DataFrame): Int = {
     val s = scan.sparkSession
     val base = s.conf.get("spark.sql.shuffle.partitions").toInt
-    val per = s.conf.get(BucketScanBytesKey, BucketScanBytesDefault.toString)
-      .trim.toLongOption.filter(_ > 0).getOrElse {
-        System.err.println(s"[graft] $BucketScanBytesKey is not a " +
-          s"positive long; using $BucketScanBytesDefault")
-        BucketScanBytesDefault
-      }
+    val per = ScopedConf.positive(s, BucketScanBytesKey, BucketScanBytesDefault)
     val bytes = scan.queryExecution.optimizedPlan.stats.sizeInBytes
     // > 1 PB ⇒ the "unknown size" sentinel (defaultSizeInBytes), not a
     // real corpus measurement — fall back to the session's static width
@@ -166,9 +156,7 @@ object DedupQueries {
 
   private[graft] def expandWidth(s: SparkSession, estPairs: Long,
       floor: Int): Int = {
-    val per = s.conf.getOption(PairsPerTaskKey)
-      .flatMap(_.trim.toLongOption).filter(_ > 0)
-      .getOrElse(PairsPerTaskDefault)
+    val per = ScopedConf.positive(s, PairsPerTaskKey, PairsPerTaskDefault)
     val est = math.min(estPairs / per + 1L, BucketMaxParts.toLong).toInt
     math.max(math.max(1, floor), est)
   }
@@ -233,12 +221,7 @@ object DedupQueries {
   private[graft] val Level3MaxRowsDefault: Long = 16L * 1000L * 1000L * 1000L
 
   private def level3MaxRows(s: SparkSession): Long =
-    s.conf.get(Level3MaxRowsKey, Level3MaxRowsDefault.toString)
-      .trim.toLongOption.filter(_ > 0).getOrElse {
-        System.err.println(s"[graft] $Level3MaxRowsKey is not a " +
-          s"positive long; using $Level3MaxRowsDefault")
-        Level3MaxRowsDefault
-      }
+    ScopedConf.positive(s, Level3MaxRowsKey, Level3MaxRowsDefault)
 
   /** Storage level for PAIR/OUTPUT-sized eager materializations,
     * stored SERIALIZED by default. The plain localCheckpoint keeps
@@ -258,9 +241,8 @@ object DedupQueries {
     * memory-pool residency at all. `DISK_ONLY` models exactly that
     * (local-disk blocks, zero storage-pool pressure) and extends the
     * default-heap envelope. Resolution: session conf
-    * [[PairStorageKey]] > env `SPARK_GRAFT_PAIR_STORAGE` (reaches
-    * Bench/Verify/ScaleStress without plumbing, cf.
-    * SPARK_GRAFT_STREAM_SINK) > `MEMORY_AND_DISK_SER`. Gate-scale runs
+    * [[PairStorageKey]] (Bench/ScaleStress set it through
+    * `SPARK_GRAFT_CONF`) > `MEMORY_AND_DISK_SER`. Gate-scale runs
     * keep the default: pair tables there are tiny and re-read hot.
     */
   private[graft] val PairStorageKey = "spark.graft.dedup.pairStorageLevel"
@@ -277,28 +259,20 @@ object DedupQueries {
     * shuffle-hash verify build), while below it the hot re-reads favor
     * the serialized-memory default. The estimate rides the bucket
     * checkpoint's own job as an `observe` metric (zero extra actions);
-    * an EXPLICIT level pin — session conf or SPARK_GRAFT_PAIR_STORAGE
-    * — always wins over the auto decision.
+    * an EXPLICIT level pin — session conf [[PairStorageKey]] — always
+    * wins over the auto decision.
     */
   private[graft] val PairDiskMinKey = "spark.graft.dedup.pairDiskOnlyMinRows"
   private[graft] val PairDiskMinDefault: Long = 10L * 1000L * 1000L
 
   private def pairDiskMin(s: SparkSession): Long =
-    s.conf.get(PairDiskMinKey, sys.env.getOrElse("SPARK_GRAFT_PAIR_DISK_MIN",
-        PairDiskMinDefault.toString))
-      .trim.toLongOption.filter(_ > 0).getOrElse {
-        System.err.println(s"[graft] $PairDiskMinKey/" +
-          "SPARK_GRAFT_PAIR_DISK_MIN is not a positive long; " +
-          s"using $PairDiskMinDefault")
-        PairDiskMinDefault
-      }
+    ScopedConf.positive(s, PairDiskMinKey, PairDiskMinDefault)
 
   /** True when the pair storage level was pinned by the user — the
     * auto-escalation must never override an explicit choice.
     */
   private def pairLevelPinned(s: SparkSession): Boolean =
-    s.conf.getOption(PairStorageKey).isDefined ||
-      sys.env.contains("SPARK_GRAFT_PAIR_STORAGE")
+    s.conf.getOption(PairStorageKey).isDefined
 
   /** Escalate the (pipeline-scoped) session's pair storage to
     * DISK_ONLY when the measured expansion volume crosses
@@ -317,18 +291,13 @@ object DedupQueries {
     }
 
   private def pairLevel(s: SparkSession): StorageLevel = {
-    val spec = s.conf.get(PairStorageKey,
-      sys.env.getOrElse("SPARK_GRAFT_PAIR_STORAGE", PairStorageDefault))
-    // env hardening (cf. StreamingQueries.sinkMode): a typo'd level
-    // name must not throw deep inside every dedup pipeline — warn with
-    // the knob named and keep the default level
+    val spec = s.conf.get(PairStorageKey, PairStorageDefault)
+    // a typo'd level name fails loudly, naming the key (cf.
+    // ScopedConf.positive) — never a silent fallback to the default
     try StorageLevel.fromString(spec.trim.toUpperCase)
     catch {
-      case _: IllegalArgumentException =>
-        System.err.println(s"[graft] $PairStorageKey/" +
-          s"SPARK_GRAFT_PAIR_STORAGE='$spec' is not a StorageLevel name; " +
-          s"using $PairStorageDefault")
-        StorageLevel.fromString(PairStorageDefault)
+      case _: IllegalArgumentException => throw new IllegalArgumentException(
+        s"$PairStorageKey='$spec' is not a StorageLevel name")
     }
   }
 
@@ -378,60 +347,6 @@ object DedupQueries {
     df
   }
 
-  /** Release a [[bigCheckpoint]]'s blocks the moment its LAST consumer
-    * has materialized (r13, from the ×2048 scratch attribution): a
-    * dedup pipeline's checkpoints all live until the section/bench
-    * harness releases them, so the PEAK scratch is their SUM — 15.5 GB
-    * for q37 alone at ×512, ~66 GB at ×2048, the box's binding
-    * resource and the measured ×4096 blocker. The bucket tables are
-    * roughly half of that and are dead as soon as the pair-expansion
-    * checkpoint (their only consumer, itself lineage-cut) is
-    * materialized — releasing them mid-pipeline halves the peak.
-    * `Dataset.unpersist` cannot do this (it consults the SQL cache
-    * manager, which never saw a localCheckpoint), so the release
-    * unpersists the checkpoint's own RDD via its LogicalRDD leaf.
-    * UNRECOVERABLE by design: the caller must guarantee no later plan
-    * references the frame (a localCheckpoint has no lineage to
-    * recompute from). `spark.graft.dedup.releaseBuckets=false` keeps
-    * the old hold-to-section-end behavior — a diagnostic hook (the
-    * width spec reads the bucket exchange's partition count off the
-    * surviving checkpoint; a debugging session may want the
-    * intermediates inspectable). [[dedupSession]] propagates the key,
-    * so setting it on the caller's session reaches the production
-    * pipelines (r14, ADVICE: it used to be read only off the child).
-    *
-    * Guarded (r14, ADVICE): the passed frame must BE a direct
-    * checkpoint — a single [[LogicalRDD]] plan. A derived/joined
-    * frame would make the old leaf-foreach free every reachable
-    * checkpoint, including live ones other pipelines still need
-    * (irrecoverable corruption); misuse now fails loudly instead.
-    */
-  private[graft] val ReleaseBucketsKey = "spark.graft.dedup.releaseBuckets"
-
-  /** Release-as-you-go for the SLICED verify's standing checkpoints
-    * (r16, VERDICT r15 #4 — the named ×8192 binding resource): with
-    * k ≥ 2 slices, q37's candidate table `pairs` used to stand
-    * through the entire verify phase (its exact-shortcut and
-    * work-list consumers are filters evaluated at the very end), so
-    * the gate's peak disk was pairs + per-slice transient — and
-    * slicing cannot reduce the standing component. With this on
-    * (default), the two consumers are materialized as their own
-    * (strictly smaller: implausible candidates dropped, flag columns
-    * gone) checkpoints immediately after `pairs` lands, and each
-    * standing checkpoint is released the moment its LAST consumer
-    * materializes: pairs → after the split lands; the verify
-    * work-list → after the last slice; the exact shortcut and the
-    * slice outputs → after the final (lineage-cut) union. Off =
-    * the pre-r16 hold-to-section-end lifetimes, the A/B lever for
-    * the peak-disk measurement. k = 1 (the bench/gate default) is
-    * UNTOUCHED either way — no new barriers in the benched plan.
-    */
-  private[graft] val ReleasePairsKey = "spark.graft.dedup.releasePairs"
-
-  private def releasePairsEnabled(s: SparkSession): Boolean =
-    s.conf.getOption(ReleasePairsKey)
-      .forall(_.trim.equalsIgnoreCase("true"))
-
   /** Verify-stage slicing (r14, the measured ×4096 blocker): q37's
     * candidate verify — fetch join + attach joins + distinct — runs
     * ~108 GB of TRANSIENT shuffle scratch at ×4096 distinct against
@@ -447,13 +362,17 @@ object DedupQueries {
     * fetch re-prunes the corpus per slice, so a doc paired across
     * slices is fetched up to k times — candidate-bounded either way.
     * Default 1 (unsliced); the scale harness sets it for the ×4096
-    * probe, a deployment sizes it like shuffle partitions.
+    * probe, a deployment sizes it like shuffle partitions. The
+    * sliced path's standing checkpoints live to section end: releasing
+    * them as their consumers land measured neutral (×2048, 8 slices:
+    * 776.2 s / 16.41 GB peak disk held vs 728.0 s / 16.30 GB released
+    * — the peak is the in-flight slice shuffle, not how long standing
+    * checkpoints linger).
     */
   private[graft] val VerifySlicesKey = "spark.graft.dedup.verifySlices"
 
   private def verifySlices(s: SparkSession): Int =
-    s.conf.getOption(VerifySlicesKey)
-      .flatMap(_.toIntOption).filter(_ >= 1).getOrElse(1)
+    ScopedConf.positiveInt(s, VerifySlicesKey, 1)
 
   /** Test hook: (rddId, numPartitions) of every checkpoint freed by
     * [[releaseCheckpoint]]. The release pin used to be a NEGATIVE
@@ -467,19 +386,38 @@ object DedupQueries {
   private[graft] val releasedCheckpoints =
     new java.util.concurrent.ConcurrentLinkedQueue[(Int, Int)]()
 
+  /** Release a [[bigCheckpoint]]'s blocks the moment its LAST consumer
+    * has materialized (r13, from the ×2048 scratch attribution): a
+    * dedup pipeline's checkpoints all live until the section/bench
+    * harness releases them, so the PEAK scratch is their SUM — 15.5 GB
+    * for q37 alone at ×512, ~66 GB at ×2048, the box's binding
+    * resource and the measured ×4096 blocker. The bucket tables are
+    * roughly half of that and are dead as soon as the pair-expansion
+    * checkpoint (their only consumer, itself lineage-cut) is
+    * materialized — releasing them mid-pipeline halves the peak.
+    * `Dataset.unpersist` cannot do this (it consults the SQL cache
+    * manager, which never saw a localCheckpoint), so the release
+    * unpersists the checkpoint's own RDD via its LogicalRDD leaf.
+    * UNRECOVERABLE by design: the caller must guarantee no later plan
+    * references the frame (a localCheckpoint has no lineage to
+    * recompute from).
+    *
+    * Guarded (r14, ADVICE): the passed frame must BE a direct
+    * checkpoint — a single [[LogicalRDD]] plan. A derived/joined
+    * frame would make the old leaf-foreach free every reachable
+    * checkpoint, including live ones other pipelines still need
+    * (irrecoverable corruption); misuse now fails loudly instead.
+    */
   private def releaseCheckpoint(df: DataFrame): Unit =
-    if (df.sparkSession.conf
-        .getOption(ReleaseBucketsKey)
-        .forall(_.trim.equalsIgnoreCase("true")))
-      df.queryExecution.analyzed match {
-        case lr: org.apache.spark.sql.execution.LogicalRDD =>
-          releasedCheckpoints.add((lr.rdd.id, lr.rdd.getNumPartitions))
-          lr.rdd.unpersist(false)
-        case other => throw new IllegalArgumentException(
-          "releaseCheckpoint expects a direct localCheckpoint frame " +
-            s"(a single LogicalRDD plan); got ${other.nodeName} — a " +
-            "derived frame could free unrelated live checkpoints")
-      }
+    df.queryExecution.analyzed match {
+      case lr: org.apache.spark.sql.execution.LogicalRDD =>
+        releasedCheckpoints.add((lr.rdd.id, lr.rdd.getNumPartitions))
+        lr.rdd.unpersist(false)
+      case other => throw new IllegalArgumentException(
+        "releaseCheckpoint expects a direct localCheckpoint frame " +
+          s"(a single LogicalRDD plan); got ${other.nodeName} — a " +
+          "derived frame could free unrelated live checkpoints")
+    }
 
   /** Child session scoped to one dedup pipeline, with AQE off.
     *
@@ -498,40 +436,27 @@ object DedupQueries {
     * session — where AQE earns its keep on ad-hoc relational plans —
     * is untouched.
     */
-  private[queries] def dedupSession(s: SparkSession): SparkSession = {
+  private[graft] def dedupSession(s: SparkSession): SparkSession = {
     val s2 = s.newSession()
     s2.conf.set("spark.sql.shuffle.partitions",
       s.conf.get("spark.sql.shuffle.partitions"))
     s2.conf.set("spark.sql.session.timeZone",
       s.conf.get("spark.sql.session.timeZone"))
     s2.conf.set("spark.sql.adaptive.enabled", "false")
+    // Every graft knob the caller set reaches the child — copied
+    // wholesale, never from a hand-kept list (r14: a key missing from
+    // that list was read only off the child, so setting it on the
+    // caller's session did nothing). An unset key stays unset, which
+    // is what lets the measured auto-escalation
+    // (maybeEscalatePairStorage) own the pair-storage decision.
+    s.conf.getAll.foreach { case (k, v) =>
+      if (k.startsWith("spark.graft.")) s2.conf.set(k, v)
+    }
     // marks this as a PIPELINE-SCOPED session: [[corpusSizedSession]]
     // may re-derive its shuffle width from the corpus scan (never a
     // caller's shared session — specs call pipeline internals on the
     // suite session directly, and a width mutation there would leak)
     s2.conf.set(DedupChildKey, "true")
-    s2.conf.set(CandBroadcastMaxKey,
-      s.conf.get(CandBroadcastMaxKey, CandBroadcastMaxDefault.toString))
-    // Propagate a pair-storage level ONLY when the parent pinned one
-    // explicitly (the env var reaches the child through pairLevel's
-    // fallback) — an unset child key is what lets the measured
-    // auto-escalation (maybeEscalatePairStorage) own the decision.
-    s.conf.getOption(PairStorageKey)
-      .foreach(s2.conf.set(PairStorageKey, _))
-    s.conf.getOption(PairDiskMinKey)
-      .foreach(s2.conf.set(PairDiskMinKey, _))
-    s.conf.getOption(FetchIdsPerPartitionKey)
-      .foreach(s2.conf.set(FetchIdsPerPartitionKey, _))
-    s.conf.getOption(BucketScanBytesKey)
-      .foreach(s2.conf.set(BucketScanBytesKey, _))
-    s.conf.getOption(Level3MaxRowsKey)
-      .foreach(s2.conf.set(Level3MaxRowsKey, _))
-    s.conf.getOption(ReleaseBucketsKey)
-      .foreach(s2.conf.set(ReleaseBucketsKey, _))
-    s.conf.getOption(ReleasePairsKey)
-      .foreach(s2.conf.set(ReleasePairsKey, _))
-    s.conf.getOption(VerifySlicesKey)
-      .foreach(s2.conf.set(VerifySlicesKey, _))
     s2
   }
 
@@ -2141,30 +2066,10 @@ object DedupQueries {
     // instead of at section end (see releaseCheckpoint)
     releaseCheckpoint(buckets)
     val k = verifySlices(raw.sparkSession)
-    // Release-as-you-go on the sliced scale path (see ReleasePairsKey):
-    // `pairs` carries every candidate (incl. implausible) plus two
-    // flag columns, and both its consumers below are lazy filters —
-    // without the split it must stand through the WHOLE verify phase,
-    // the measured ×8192 binding resource (SURVEY §21.3). Splitting
-    // materializes the two consumers as strictly smaller checkpoints
-    // (two filter jobs over a lineage-cut leaf — no shuffle), after
-    // which `pairs` is dead and released before any slice runs.
-    val splitPairs = k >= 2 && releasePairsEnabled(raw.sparkSession)
-    val (exactPairs, toVerify) =
-      if (splitPairs) {
-        val ep = graft.RoundStats.timed("gram_split_exact") {
-          bigCheckpoint(pairs.filter(col("exact"))
-            .select(col("a"), col("b"), lit(1.0).as("jaccard"))) }
-        val tv = graft.RoundStats.timed("gram_split_vlist") {
-          bigCheckpoint(pairs.filter(!col("exact") && col("plausible"))
-            .select(col("a"), col("b"))) }
-        releaseCheckpoint(pairs)
-        (ep, tv)
-      } else (
-        pairs.filter(col("exact"))
-          .select(col("a"), col("b"), lit(1.0).as("jaccard")),
-        pairs.filter(!col("exact") && col("plausible"))
-          .select(col("a"), col("b")))
+    val exactPairs = pairs.filter(col("exact"))
+      .select(col("a"), col("b"), lit(1.0).as("jaccard"))
+    val toVerify = pairs.filter(!col("exact") && col("plausible"))
+      .select(col("a"), col("b"))
     def verifySliceOf(cands: DataFrame, tag: String): DataFrame =
       attachFeaturesBy(cands,
         ids => hashedFeatures(gram3Of(raw.join(ids, "doc_id")), "grams"),
@@ -2172,7 +2077,6 @@ object DedupQueries {
         .select(col("a"), col("b"),
           jaccard(col("f_a"), col("f_b")).as("jaccard"))
         .filter(col("jaccard") >= 0.3)
-    val sliceOuts = scala.collection.mutable.Buffer[DataFrame]()
     val verified =
       if (k == 1) verifySliceOf(toVerify, "gram")
       else {
@@ -2199,32 +2103,16 @@ object DedupQueries {
           (made - keep).foreach(id =>
             live.get(id).foreach(_.unpersist(blocking = true)))
           System.gc() // ContextCleaner drops the slice's shuffle files
-          sliceOuts += out
           out
         }.reduce(_ union _)
       }
-    // the verify work-list's last consumer was the final slice — on
-    // the split path its blocks are dead before the final union job
-    if (splitPairs) releaseCheckpoint(toVerify)
     // The exact-Jaccard verify join is the pipeline's last (and, on a
     // near-dup-rich corpus, largest) compute — materialize it as its
     // own stage so the bench attributes it instead of folding it into
     // the caller's final action (the one attribution hole the r8
     // stages map left: q37 showed 2.4 s of stages under a 6 s query).
     // Output-sized: only above-threshold pairs land in the checkpoint.
-    val fin = finalStage("gram_final") { exactPairs.union(verified) }
-    // On the split path the final union COPIED the exact-shortcut and
-    // slice-output blocks into its own lineage-cut checkpoint — they
-    // are dead the moment it lands. Guarded on the final actually
-    // being a checkpoint leaf: under the audit's nofinal the returned
-    // plan still READS them (releasing would corrupt it).
-    if (splitPairs &&
-        fin.queryExecution.analyzed
-          .isInstanceOf[org.apache.spark.sql.execution.LogicalRDD]) {
-      releaseCheckpoint(exactPairs)
-      sliceOuts.foreach(releaseCheckpoint)
-    }
-    fin
+    finalStage("gram_final") { exactPairs.union(verified) }
   }
 
   // ---------------------------------------------------------------- q38

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.Tables
+import graft.{ScopedConf, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -88,7 +88,7 @@ object Extended14 {
       // dedup child session can't affect the blocking/verify stages
       // above.)
       // The cores/4 default cap is itself a conf
-      // (spark.graft.cc.loopPartsCap, env SPARK_GRAFT_CC_LOOP_CAP):
+      // (spark.graft.cc.loopPartsCap):
       // loop width also multiplies CONCURRENT spill volume (each round
       // holds ~width × two sorted join sides of shuffle files), so a
       // scratch-constrained deployment narrows the loop to trade
@@ -97,18 +97,8 @@ object Extended14 {
       // device mid-loop.
       val s2 = pairs.sparkSession
       val cores = s2.sparkContext.defaultParallelism
-      // env hardening (cf. StreamingQueries.sinkMode): a malformed or
-      // non-positive cap must not throw inside the label loop — warn
-      // with the knob named and keep the cores/4 default
-      val capDefault = math.max(4L, cores / 4L)
-      val cap = s2.conf.get("spark.graft.cc.loopPartsCap",
-          sys.env.getOrElse("SPARK_GRAFT_CC_LOOP_CAP", capDefault.toString))
-        .trim.toLongOption.filter(_ > 0).getOrElse {
-          System.err.println("[graft] spark.graft.cc.loopPartsCap/" +
-            "SPARK_GRAFT_CC_LOOP_CAP is not a positive long; " +
-            s"using $capDefault")
-          capDefault
-        }
+      val cap = ScopedConf.positive(s2, "spark.graft.cc.loopPartsCap",
+        math.max(4L, cores / 4L))
       // pair volume observed on the pair checkpoint's own job
       // (DedupQueries.nearDupPairCount) — no per-invocation count
       // action (VERDICT r10 #4)

@@ -253,8 +253,8 @@ object Extended22 {
                 // are sized.
                 val fuseK =
                   if (nHeads != 0) 1
-                  else s.conf.getOption("spark.graft.pagerank.fuseRounds")
-                    .flatMap(_.toIntOption).filter(_ >= 1).getOrElse(5)
+                  else graft.ScopedConf.positiveInt(s,
+                    "spark.graft.pagerank.fuseRounds", 5)
                 var left = iters
                 var round = 0
                 while (left > 0) {

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.Tables
+import graft.{ScopedConf, Tables}
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -270,8 +270,7 @@ object StreamingQueries {
           System.err.println("[graft] row-count footer probe failed " +
             s"for $key (${e.getClass.getSimpleName}: ${e.getMessage}) — " +
             "intra-batch ingest unknown; the IN-HEAP state provider " +
-            "and the gate-scale partition cap will be kept regardless " +
-            "of batch size for this query")
+            "will be kept regardless of batch size for this query")
           0L
       }
     }
@@ -288,45 +287,8 @@ object StreamingQueries {
     * watermark advancing between them) never approaches it.
     */
   private def heapIngestMaxRows(s: SparkSession): Long =
-    s.conf.getOption("spark.graft.stream.heapIngestMaxRows")
-      .flatMap(_.toLongOption).filter(_ > 0).getOrElse(60000000L)
-
-  /** Rows of single-batch ingest one stream shuffle partition should
-    * carry before the partition cap scales out. DEFAULT DISABLED
-    * (0 → the fixed gate cap), a MEASURED negative result (r15): the
-    * instrumented ×1024 q138 probe first showed 77% of the wall in
-    * one 4-task stage on a 32-core box — but the same-day partition
-    * sweep at ×1024 came out {4p: 1,737.7 s, 16p: 1,678.2 s,
-    * 32p: 2,080.7 s}: FLAT, then WORSE. Attribution for the 32p
-    * regression: per-group state-update latency inflated 53 µs →
-    * 440 µs almost entirely OFF-CPU (RocksDB writer stalls — 32
-    * instances flushing/compacting against ONE disk), and shuffle
-    * volume inflated 2.6× (4.6 → 12.2 GB: per-reducer compressed
-    * chunks shrink 8-fold and lz4 loses its dictionary on the highly
-    * redundant keyed-member rows). On a single-disk box the stateful
-    * stage is state-store-IO-bound, not core-bound, so width buys
-    * nothing; on a cluster, width scales per-EXECUTOR-DISK and this
-    * knob (rows per partition, e.g. 2e6) sizes it — which is why the
-    * mechanism ships but the single-box default stays off.
-    */
-  private def rowsPerStreamPartition(s: SparkSession): Long =
-    s.conf.getOption("spark.graft.stream.rowsPerPartition")
-      .flatMap(_.toLongOption).filter(_ > 0).getOrElse(0L)
-
-  /** The stream's shuffle-partition count (state store instances):
-    * the fixed gate cap (min(4, session)) unless
-    * [[rowsPerStreamPartition]] is enabled (> 0) AND the estimated
-    * single-batch ingest of the stateful operator exceeds it per
-    * partition — then linear in ingest up to the session's width.
-    * Pure — spec'd directly.
-    */
-  private[graft] def streamPartitionCap(prev: Int, ingestRows: Long,
-      rowsPerPart: Long): Int = {
-    val base = math.min(4, prev)
-    if (ingestRows <= 0L || rowsPerPart <= 0L) base
-    else math.max(base,
-      math.min(prev.toLong, ingestRows / rowsPerPart).toInt)
-  }
+    ScopedConf.positive(s, "spark.graft.stream.heapIngestMaxRows",
+      60000000L)
 
   private def runToSnapshot(s: SparkSession, df: DataFrame, prefix: String,
       mode: OutputMode, corpusLinearState: Boolean = false,
@@ -344,9 +306,14 @@ object StreamingQueries {
     // The cap was re-measured at ×8 (800k events, r6): an adaptive
     // 26-partition variant LOST to the fixed cap — 59.8-60.0 s vs
     // 52.2-57.1 s over the 8 stream demos, two runs each — the drains
-    // are commit-bound, not stateful-CPU-bound, so 4 stands. A real
-    // deployment sizes partitions to expected STATE volume; override
-    // via SPARK_GRAFT_STREAM_PARTITIONS for deployment-shaped runs.
+    // are commit-bound, not stateful-CPU-bound, so 4 stands. Scaling
+    // it with the estimated single-batch ingest measured flat, then
+    // worse (r15, ×1024 q138 sweep {4p: 1,737.7 s, 16p: 1,678.2 s,
+    // 32p: 2,080.7 s}): at 32p per-group state-update latency went
+    // 53 µs → 440 µs almost entirely OFF-CPU (32 RocksDB instances
+    // flushing/compacting against ONE disk) and shuffle volume 2.6×
+    // (per-reducer lz4 chunks shrink 8-fold) — on a single-disk box
+    // the stateful stage is state-store-IO-bound, not core-bound.
     val prev = s.conf.get("spark.sql.shuffle.partitions")
     // Stage attribution (cf. the dedup/loop families): the stream
     // demos are the bench's last opaque walls. `<q>_start` is plan +
@@ -398,20 +365,8 @@ object StreamingQueries {
     }
     val q = graft.RoundStats.timed(s"${prefix}_start") {
       try {
-        // env hardening (cf. ScopedConf.TinyLoopRows): a malformed or
-        // non-positive override must not throw inside every stream
-        // drain — warn with the var named and keep the default
-        val cap = sys.env.get("SPARK_GRAFT_STREAM_PARTITIONS")
-          .flatMap { v =>
-            val p = v.trim.toIntOption.filter(_ > 0)
-            if (p.isEmpty) System.err.println(
-              s"[graft] SPARK_GRAFT_STREAM_PARTITIONS='$v' is not a " +
-                "positive int; using the default stream cap")
-            p
-          }
-          .getOrElse(streamPartitionCap(prev.toInt, ingestRows,
-            rowsPerStreamPartition(s)))
-        s.conf.set("spark.sql.shuffle.partitions", cap.toString)
+        s.conf.set("spark.sql.shuffle.partitions",
+          math.min(4, prev.toInt).toString)
         if (!useFile)
           df.writeStream.outputMode(mode).format("memory")
             .queryName(name).start()
@@ -1036,8 +991,7 @@ object StreamingQueries {
     * what bounds per-key state under adversarial input.
     */
   private def streamBucketCap(s: SparkSession): Int =
-    s.conf.getOption("spark.graft.dedup.streamBucketCap")
-      .flatMap(_.toIntOption).filter(_ > 0).getOrElse(256)
+    ScopedConf.positiveInt(s, "spark.graft.dedup.streamBucketCap", 256)
 
   /** Streaming NEAR-dup dedup (r13) — the streaming form of q35, the
     * operator a Kafka-fed corpus pipeline runs to flag each incoming
@@ -1145,9 +1099,8 @@ object StreamingQueries {
     // Test/diagnostic knob: cap files per micro-batch so a multi-file
     // corpus drains in MULTIPLE batches (the per-batch-recompute
     // regression surface the 1-batch gates can't see).
-    val maxFiles = s.conf
-      .getOption("spark.graft.stream.maxFilesPerTrigger")
-      .flatMap(_.toIntOption).filter(_ > 0)
+    val maxFiles = ScopedConf.positiveOption(s,
+      "spark.graft.stream.maxFilesPerTrigger")
     // The documents table ships BOTH ways: the driver's testdata dirs
     // hold a single FILE `documents.parquet` (a file source needs a
     // directory + glob), while Spark-written dirs (ScaleStress's
@@ -1237,21 +1190,11 @@ object StreamingQueries {
       .filter(col("jaccard") >= 0.5)
   }
 
-  /** q138/q139's stateful-operator single-batch ingest estimate for
-    * the partition cap: ~17 keyed member rows per doc (16 LSH bands +
-    * the exact-signature band — the standing index shape). The
-    * replay regime feeds the corpus as one batch, so this IS the
-    * rows the sort + flatMapGroupsWithState stage carries.
-    */
-  private def docIngestRows(s: SparkSession, dir: String): Long =
-    17L * tableRowCount(s, dir, "documents")
-
   def q138(s: SparkSession, dir: String): DataFrame =
     // ~17 buckets/doc of member-list state ⇒ corpus-linear,
     // disk-backed at scale
     runToSnapshot(s, streamNearDupPairs(s, dir), "q138_sink",
-      OutputMode.Append, corpusLinearState = true,
-      ingestRows = docIngestRows(s, dir))
+      OutputMode.Append, corpusLinearState = true)
       .orderBy("a", "b")
 
   /** Streaming incremental APPLY (r13) — the keep/drop decision stream
@@ -1286,8 +1229,7 @@ object StreamingQueries {
     runToSnapshot(s,
       streamNearDupPairs(s, dir)
         .select(col("b").as("doc_id"), col("jaccard")),
-      "q139_sink", OutputMode.Append, corpusLinearState = true,
-      ingestRows = docIngestRows(s, dir))
+      "q139_sink", OutputMode.Append, corpusLinearState = true)
       .groupBy("doc_id")
       .agg(max(col("jaccard")).as("max_jaccard"),
         count(lit(1)).as("n_dup_sources"))

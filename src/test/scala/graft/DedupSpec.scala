@@ -463,42 +463,23 @@ class DedupSpec extends AnyFunSuite {
       s"tiny bytes/partition must out-size the session width ($expected)")
     assert(expected <= DedupQueries.BucketMaxParts)
     // the width must REACH an exchange: the bucket checkpoint persists
-    // at exactly the computed partition count. The r13 in-pipeline
-    // bucket release (releaseCheckpoint) frees that checkpoint before
-    // minHashPairs returns, so the width evidence needs the
-    // diagnostic hold-back knob; the release itself is pinned right
-    // after with the knob at its default. Snapshot the registry
-    // IMMEDIATELY after construction (the checkpoints are eager):
-    // once minHashPairs returns, its intermediate DataFrames are
-    // unreachable and a GC during the collect below lets the
-    // ContextCleaner unpersist them — the registry delta would come
-    // up empty (the suite's one intermittent flake, r12).
-    sTiny.conf.set("spark.graft.dedup.releaseBuckets", "false")
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    val viaWide = DedupQueries.minHashPairs(dfTiny)
-    val newWidths = spark.sparkContext.getPersistentRDDs
-      .filter { case (id, _) => !before(id) }
-      .values.map(_.getNumPartitions).toSet
-    val wideRows = viaWide.collect()
-      .map(r => (r.getAs[Long]("a"), r.getAs[Long]("b"),
-        r.getAs[Double]("jaccard"))).sortBy(t => (t._1, t._2))
-    assert(newWidths.contains(expected),
-      s"no checkpoint ran at the stat-driven width $expected: $newWidths")
-    // r13 release pin, r14 form (ADVICE: the old negative registry
-    // assertion passed vacuously under the ContextCleaner GC race and
-    // would spuriously fail on a partition-count collision): the
-    // release hook records (rddId, width) for every freed checkpoint —
-    // assert the DIRECT evidence: a checkpoint at the stat-driven
-    // width was released, and that specific id is gone from the
-    // persistent-RDD registry.
-    sTiny.conf.unset("spark.graft.dedup.releaseBuckets")
+    // at exactly the computed partition count. The in-pipeline bucket
+    // release (releaseCheckpoint) frees that checkpoint before
+    // minHashPairs returns, and its hook records (rddId, width) for
+    // every freed checkpoint — the DIRECT evidence (r14 form, ADVICE:
+    // a registry snapshot races the ContextCleaner, and a negative
+    // registry assertion passed vacuously): a checkpoint at the
+    // stat-driven width was released, and that specific id is gone
+    // from the persistent-RDD registry.
     DedupQueries.releasedCheckpoints.clear()
-    DedupQueries.minHashPairs(
-      sTiny.createDataFrame(docs).toDF("doc_id", "text"))
+    val viaWide = DedupQueries.minHashPairs(dfTiny)
     val released = {
       import scala.jdk.CollectionConverters._
       DedupQueries.releasedCheckpoints.asScala.toList
     }
+    val wideRows = viaWide.collect()
+      .map(r => (r.getAs[Long]("a"), r.getAs[Long]("b"),
+        r.getAs[Double]("jaccard"))).sortBy(t => (t._1, t._2))
     val atWidth = released.filter(_._2 == expected)
     assert(atWidth.nonEmpty,
       s"no checkpoint at the stat-driven width $expected was released " +
@@ -629,40 +610,27 @@ class DedupSpec extends AnyFunSuite {
     assert(plain.nonEmpty)
   }
 
-  test("releaseBuckets knob reaches the production pipeline through dedupSession") {
-    // ADVICE r13 (medium): the knob used to be read only off the CHILD
-    // session, so a caller-session conf.set was silently ignored by
-    // the q35/q37 production pipelines (dedupSession did not propagate
-    // it). This drives the real entry — nearDupPairs → dedupSession →
-    // minHashPairs — both ways, using the release hook as evidence.
+  test("dedupSession copies every spark.graft.* key the caller set into the child") {
+    // ADVICE r13/r14: dedupSession used to copy a hand-kept list of
+    // keys, so a knob missing from it was read only off the CHILD and
+    // a caller-session conf.set was silently ignored by the production
+    // pipelines. The child now copies every spark.graft.* key.
     import graft.queries.DedupQueries
-    import scala.jdk.CollectionConverters._
-    val docs = ((0 until 48).map(i => (i.toLong, s"alpha beta gamma delta u$i")) ++
-      (0 until 16).map(i => (100L + i, "alpha beta gamma delta epsilon")))
-    def corpusDir(tag: String): String = {
-      val d = java.nio.file.Files.createTempDirectory(s"graft_knob_$tag")
-      spark.createDataFrame(docs).toDF("doc_id", "text")
-        .write.mode("overwrite").parquet(s"$d/documents.parquet")
-      d.toString
+    val keys = Seq(DedupQueries.VerifySlicesKey -> "3",
+      DedupQueries.PairsPerTaskKey -> "1000",
+      "spark.graft.cc.loopPartsCap" -> "6")
+    keys.foreach { case (k, v) => spark.conf.set(k, v) }
+    val child = try DedupQueries.dedupSession(spark)
+      finally keys.foreach { case (k, _) => spark.conf.unset(k) }
+    keys.foreach { case (k, v) =>
+      assert(child.conf.getOption(k) === Some(v), s"$k did not reach the child")
     }
-    // knob=false on the CALLER's session must suppress the in-pipeline
-    // release inside the child dedup session
-    val dirOff = corpusDir("off")
-    spark.conf.set(DedupQueries.ReleaseBucketsKey, "false")
-    try {
-      DedupQueries.releasedCheckpoints.clear()
-      assert(DedupQueries.nearDupPairs(spark, dirOff).count() > 0)
-      assert(DedupQueries.releasedCheckpoints.isEmpty,
-        "releaseBuckets=false on the caller session did not reach the " +
-          s"dedup child session: ${DedupQueries.releasedCheckpoints.asScala}")
-    } finally spark.conf.unset(DedupQueries.ReleaseBucketsKey)
-    // default (unset) releases — fresh dir so the pair memo can't
-    // short-circuit the pipeline
-    val dirOn = corpusDir("on")
-    DedupQueries.releasedCheckpoints.clear()
-    assert(DedupQueries.nearDupPairs(spark, dirOn).count() > 0)
-    assert(!DedupQueries.releasedCheckpoints.isEmpty,
-      "default-on release did not fire through the production pipeline")
+    assert(child.conf.get(DedupQueries.DedupChildKey) === "true")
+    assert(child.conf.get("spark.sql.adaptive.enabled") === "false")
+    // a key the caller did NOT set stays unset in the child: that is
+    // what lets the measured pair-storage escalation own the decision
+    assert(spark.conf.getOption(DedupQueries.PairStorageKey).isEmpty)
+    assert(child.conf.getOption(DedupQueries.PairStorageKey).isEmpty)
   }
 
   test("q37 sliced verify (verifySlices=4) is value-identical to unsliced") {
@@ -683,6 +651,29 @@ class DedupSpec extends AnyFunSuite {
       s"slicing changed the pair set: only-sliced ${sliced -- plain}, " +
         s"only-plain ${plain -- sliced}")
     assert(plain.nonEmpty)
+  }
+
+  test("sliced q37 frees its bucket table once the pair expansion lands") {
+    // The bucket table's only consumer is the lineage-cut pair
+    // expansion, so the sliced path releases it mid-pipeline; every
+    // other checkpoint is held to section end. The freed id must be
+    // gone from the persistent-RDD registry.
+    import graft.queries.DedupQueries
+    import scala.jdk.CollectionConverters._
+    spark.conf.set(DedupQueries.VerifySlicesKey, "2")
+    DedupQueries.releasedCheckpoints.clear()
+    val rows = try
+      SparkEntry.queries("q37_ngram_jaccard")(spark, sf).collect()
+    finally spark.conf.unset(DedupQueries.VerifySlicesKey)
+    assert(rows.nonEmpty)
+    val released = DedupQueries.releasedCheckpoints.asScala.toList
+    assert(released.size === 1,
+      s"sliced q37 must release exactly its bucket table: $released")
+    val registry = spark.sparkContext.getPersistentRDDs.keySet
+    released.foreach { case (id, _) =>
+      assert(!registry(id),
+        s"released checkpoint rdd_$id still in the persistent registry")
+    }
   }
 
   test("q36 contract probes plan corpus/output-sized joins as sort-merge") {
