@@ -61,23 +61,18 @@ object ScopedConf {
     * dominates well past the gate scale, so the threshold's exact
     * value is uncritical there and earns its keep in cold
     * (JIT-throttled) environments. Override with
-    * SPARK_GRAFT_TINY_LOOP_ROWS for deployment-shaped tuning.
+    * SPARK_GRAFT_TINY_LOOP_ROWS for deployment-shaped tuning; a value
+    * that is not a non-negative integer throws at first use, naming
+    * the variable.
     */
-  val TinyLoopRows: Long = {
-    val default = 100L * 1000 * 1000
-    sys.env.get("SPARK_GRAFT_TINY_LOOP_ROWS") match {
-      case None => default
-      case Some(v) => v.trim.toLongOption.getOrElse {
-        // a malformed value must not surface as an opaque
-        // ExceptionInInitializerError at first ScopedConf use —
-        // warn with the env var named and keep the default
-        System.err.println(
-          s"[graft] SPARK_GRAFT_TINY_LOOP_ROWS='$v' is not a long; " +
-            s"using default $default")
-        default
-      }
+  lazy val TinyLoopRows: Long = tinyLoopRows(sys.env.get("SPARK_GRAFT_TINY_LOOP_ROWS"))
+
+  private[graft] def tinyLoopRows(env: Option[String]): Long =
+    env.fold(100L * 1000 * 1000) { v =>
+      v.trim.toLongOption.filter(_ >= 0).getOrElse(
+        throw new IllegalArgumentException(
+          s"SPARK_GRAFT_TINY_LOOP_ROWS='$v' is not a non-negative integer"))
     }
-  }
 
   /** Loop-shuffle width budget, in measured per-round ROWS per
     * partition (r16, optimization round). A tiny-profile loop's
@@ -110,9 +105,10 @@ object ScopedConf {
     } else body
 
   /** A positive integer `spark.graft.*` knob off session `s`, or
-    * `default` when unset. Every graft knob is read through here: a
-    * value that is not a positive integer throws, naming the key and
-    * the value, instead of silently running the default.
+    * `default` when unset. Every graft knob is read through here (or
+    * [[nonNegative]]): a value that is not a positive integer throws,
+    * naming the key and the value, instead of silently running the
+    * default.
     */
   def positive(s: SparkSession, key: String, default: Long): Long =
     positiveOption(s, key).getOrElse(default)
@@ -127,10 +123,17 @@ object ScopedConf {
 
   /** [[positive]] for a knob with no default (None when unset). */
   def positiveOption(s: SparkSession, key: String): Option[Long] =
+    longOption(s, key, 1L, "a positive integer")
+
+  /** [[positive]] for a knob where 0 is a meaningful value. */
+  def nonNegative(s: SparkSession, key: String, default: Long): Long =
+    longOption(s, key, 0L, "a non-negative integer").getOrElse(default)
+
+  private def longOption(s: SparkSession, key: String, min: Long,
+      what: String): Option[Long] =
     s.conf.getOption(key).map { v =>
-      v.trim.toLongOption.filter(_ > 0).getOrElse(
-        throw new IllegalArgumentException(
-          s"$key='$v' is not a positive integer"))
+      v.trim.toLongOption.filter(_ >= min).getOrElse(
+        throw new IllegalArgumentException(s"$key='$v' is not $what"))
     }
 
   /** The `SPARK_GRAFT_CONF` entry points' session overrides:

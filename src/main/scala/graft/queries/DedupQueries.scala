@@ -579,8 +579,8 @@ object DedupQueries {
     // decision is deterministic per run — no AQE, no stats guesswork.
     val s = candIds.sparkSession
     val nIds = candIds.count()
-    val broadcastOk = nIds <= s.conf
-      .get(CandBroadcastMaxKey, CandBroadcastMaxDefault.toString).toLong
+    val broadcastOk = nIds <=
+      ScopedConf.nonNegative(s, CandBroadcastMaxKey, CandBroadcastMaxDefault)
     // Flipped-path partition count follows the MEASURED candidate
     // count, not the session's static shuffle.partitions: an SHJ hash
     // relation build is NOT spillable, so each build partition

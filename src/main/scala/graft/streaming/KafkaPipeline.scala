@@ -56,6 +56,7 @@ object KafkaPipeline {
     */
   def paymentRangeSum(s: SparkSession, records: DataFrame,
       heldEmission: Boolean = false): DataFrame = {
+    LocalCheckpointFileManager.install(s)
     val payments = StreamingQueries.jsonPaymentSource(
       s, records.select(col("value")), declareWatermark = false)
     // the range transform's expected event shape; its own watermark
@@ -78,12 +79,14 @@ object KafkaPipeline {
     * the source offsets + operator state for exactly-once resume.
     */
   def sink(df: DataFrame, bootstrapServers: String,
-      topic: String = "sink", checkpointDir: String): StreamingQuery =
+      topic: String = "sink", checkpointDir: String): StreamingQuery = {
+    LocalCheckpointFileManager.install(df.sparkSession)
     StreamingQueries.toJsonSink(df).writeStream.format("kafka")
       .option("kafka.bootstrap.servers", bootstrapServers)
       .option("topic", topic)
       .option("checkpointLocation", checkpointDir)
       .start()
+  }
 
   /** The complete reference pipeline, one call: source topic →
     * trailing range sum → sink topic.

@@ -115,18 +115,19 @@ object StreamingQueries {
     * harnesses (ScaleStress's stream sections).
     */
   @volatile private[graft] var sinkModeOverride: Option[String] = None
-  private def sinkMode: String = {
-    val raw = sinkModeOverride.orElse(sys.env.get("SPARK_GRAFT_STREAM_SINK"))
-      .map(_.trim.toLowerCase)
-    raw match {
-      case Some("file")           => "file"
-      case Some("memory") | None  => "memory"
-      case Some(other) =>
-        System.err.println(s"[graft] SPARK_GRAFT_STREAM_SINK='$other' is " +
-          "not memory|file; using the memory sink")
-        "memory"
+  private def sinkMode: String =
+    sinkModeOf(sinkModeOverride.orElse(sys.env.get("SPARK_GRAFT_STREAM_SINK")))
+
+  /** "memory" (unset) or "file"; any other value throws, naming
+    * SPARK_GRAFT_STREAM_SINK.
+    */
+  private[graft] def sinkModeOf(raw: Option[String]): String =
+    raw.map(_.trim.toLowerCase) match {
+      case Some("file")          => "file"
+      case Some("memory") | None => "memory"
+      case Some(_) => throw new IllegalArgumentException(
+        s"SPARK_GRAFT_STREAM_SINK='${raw.get}' is not memory|file")
     }
-  }
 
   /** File-sink scratch dirs created by [[runToSnapshot]] (output +
     * checkpoint, output-sized): tracked so harness callers can reclaim
@@ -293,6 +294,7 @@ object StreamingQueries {
   private def runToSnapshot(s: SparkSession, df: DataFrame, prefix: String,
       mode: OutputMode, corpusLinearState: Boolean = false,
       ingestRows: Long = 0L): DataFrame = {
+    LocalCheckpointFileManager.install(s)
     val useFile = sinkMode == "file"
     val name = s"${prefix}_${System.nanoTime()}"
     val fileBase = s"target/stream_sink/$name"
